@@ -157,7 +157,10 @@ def gd_weights(
     is seeded with the k=0 term and accumulates ascending k (matching a
     left-associated ``s0*w0 + s1*w1 + ...`` SQL chain), and the update
     is literally ``w[j] - lr * ((acc - b[j]) / n + lam * w[j])``.  Any
-    SQL oracle must unroll the SAME shape."""
+    SQL oracle must unroll the SAME shape.
+
+    Round state: model-sized (d+1 weights over the Gram), so the rounds
+    run in plain Python after one Spark scan — no Spark job per round."""
     dd = len(b)
     w = [0.0] * dd
     for _ in range(iters):

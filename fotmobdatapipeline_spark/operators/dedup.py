@@ -763,6 +763,9 @@ def connected_dup_clusters(
     the lineage so the plan doesn't grow with iterations — standard
     Spark iterative-algo hygiene.
 
+    Round state: data-sized (one label per document), so the rounds
+    stay Spark joins.
+
     Output: (doc_id, cluster_id) for every doc that appears in a pair.
     Iterative + loop-terminated -> no SQL oracle; rows-only checked, with
     invariants pinned in tests.

@@ -2,9 +2,11 @@
 
 Together with operators/dedup.py::connected_dup_clusters this covers the
 iterative-algorithm surface: fixed-round message passing with bounded
-per-round cost.  Rank centrality over the near-duplicate candidate
-graph ranks the "hub" documents a dedup pass should keep (or audit)
-first.
+per-round cost.  PageRank over the near-duplicate candidate graph
+ranks the "hub" documents a dedup pass should keep (or audit) first.
+Every loop here iterates data-sized state (one value per graph node or
+edge); model-sized solvers run in one task instead
+(operators/preference.py).
 
 Determinism: ranks are exact DECIMAL(38, 18) throughout — decimal sums
 are order-insensitive, so results are bit-identical across partitionings
@@ -31,8 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fotmobdatapipeline_spark.operators.exactmath import floor_div
-
 _ONE = "CAST(1 AS DECIMAL(38,18))"
 _DAMP = "CAST(0.85 AS DECIMAL(3,2))"
 _BASE = "CAST(0.15 AS DECIMAL(3,2))"
@@ -45,7 +45,10 @@ def pagerank(
     iters: int = 10,
 ) -> DataFrame:
     """(node, rank) after ``iters`` rounds of rank = 0.15 + 0.85 * sum of
-    rank/deg over in-neighbors, starting from rank 1."""
+    rank/deg over in-neighbors, starting from rank 1.
+
+    Round state: data-sized (one rank per graph node), so the rounds
+    stay Spark joins."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -87,83 +90,6 @@ def pagerank(
     return ranks
 
 
-def weighted_pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iters: int = 5,
-    unit: int = 10**12,
-) -> DataFrame:
-    """Weighted PageRank in exact integer micro-units: rank flows along
-    edges proportionally to integer weights — rank-centrality-style
-    spectral ranking over count-weighted digraphs (Negahban, Oh & Shah,
-    "Iterative Ranking from Pair-wise Comparisons", NeurIPS 2012 is the
-    statistical grounding for using the stationary walk as a rating).
-
-    Per round (all arithmetic DECIMAL(38,0) with the exact truncating
-    floor-division from operators/exactmath.py — no LONG wrap, no float):
-
-        contrib_e = (rank_src * w_e)    fdiv W_src      (W = out-weight)
-        rank_v'   = 0.15*unit + (85 * sum contribs) fdiv 100
-
-    Same bounded shuffle pair per round as :func:`pagerank` (one join,
-    one aggregate, checkpoint hygiene); dangling nodes leak mass as in
-    the unweighted form.  Output (node, rank_micro BIGINT, rank DOUBLE).
-    """
-    dec = "decimal(38,0)"
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).filter(F.col(weight) > 0)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_w = e.groupBy("src").agg(F.sum("w").alias("w_out"))
-    ed = e.join(out_w, "src").localCheckpoint(eager=True)
-
-    base = 15 * unit // 100  # 0.15 * unit, exact
-
-    ranks = nodes.select("node", F.lit(unit).cast(dec).alias("r"))
-    for _ in range(iters):
-        contribs = (
-            ed.join(ranks, ed.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                floor_div(f"CAST(r AS {dec}) * CAST(w AS {dec})",
-                          f"CAST(w_out AS {dec})").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base).cast(dec)
-                    + floor_div(
-                        f"CAST(85 AS {dec})"
-                        f" * COALESCE(in_sum, CAST(0 AS {dec}))",
-                        "CAST(100 AS decimal(38,0))",
-                    )
-                )
-                .cast(dec)
-                .alias("r"),
-            )
-            # LAZY checkpoint (r14): same single-consumer-per-round
-            # argument as :func:`pagerank` above.
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
-        "node",
-        F.col("r").cast("bigint").alias("rank_micro"),
-        (F.col("r").cast("double") / F.lit(float(unit))).alias("rank"),
-    )
-
-
 def kcore(
     pairs: DataFrame,
     k: int = 3,
@@ -188,6 +114,9 @@ def kcore(
     of the edge list against the keep set (all key-partitioned hash
     operations, no node ever sees more than its neighborhood), with
     ``localCheckpoint`` lineage hygiene per round like pagerank above.
+
+    Round state: data-sized (the surviving edge list), so the rounds
+    stay Spark joins.
     """
     e = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -274,6 +203,9 @@ def min_label_propagation(
     jump — all key-partitioned; no node ever sees more than its own
     neighborhood, no collect, no window.  ``localCheckpoint`` per round
     truncates the per-round lineage growth exactly like pagerank above.
+
+    Round state: data-sized (one label per graph node), so the rounds
+    stay Spark joins.
 
     Output: (doc_id, component) for every node in >= 1 pair.
     """

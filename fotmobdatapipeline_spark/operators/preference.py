@@ -2,7 +2,7 @@
 over "arena battle" logs (model A vs model B, judged winner).
 
 Preference pairs are the raw material of RLHF / DPO data curation; the
-two operators here are the curation-side aggregates over them:
+operators here are the curation-side aggregates over them:
 
 * ``win_rates`` — per-model battle/win counts and Laplace-smoothed win
   rate.  One explode + one hash aggregate; map-side combinable.
@@ -13,23 +13,28 @@ two operators here are the curation-side aggregates over them:
   win matrix — data-scale battles are collapsed to one row per directed
   (model, opponent) pair first, so the iteration cost is bounded by the
   number of distinct matchups, not the number of battles.
+* ``rank_centrality`` — the spectral alternative: a weighted random walk
+  on the defeat digraph (Negahban, Oh & Shah, "Iterative Ranking from
+  Pair-wise Comparisons", NeurIPS 2012), same micro-unit discipline.
 
-Determinism: all MM arithmetic is exact-integer micro-units (ratings
-are integer multiples of 1/UNIT), every division the exact decimal
-floor-division from operators/exactmath.py (truncating; identical to
-DuckDB's ``//`` on HUGEINT — verified by the value-exact oracle for
-``pref_btl_ratings``, and safe at any intermediate magnitude up to
-1e38, unlike Spark's LONG-wrapping ``div``).  No float enters until the
-final display-only rating = micro / UNIT division (one IEEE op,
-bit-portable).
+Determinism: both solvers are exact-integer micro-unit arithmetic
+(ratings are integer multiples of 1/UNIT) and every division truncates
+non-negative integers, so Python's ``//`` on arbitrary-precision ints
+is identical to DuckDB's ``//`` on HUGEINT — verified by the
+value-exact oracles for ``pref_btl_ratings`` and
+``pref_rank_centrality``.  No intermediate can wrap; only the final
+micro-unit outputs must fit BIGINT, and leaving that range raises.  No
+float enters until the final display-only rating = micro / UNIT
+division (one IEEE op in Spark, bit-portable).
 
 Scale notes:
 * The battles -> win-matrix collapse is the only data-scale shuffle
   (one hash aggregate on the unordered pair key, map-side combinable).
-* Each MM round is two hash joins (matrix x ratings on both endpoints),
-  one aggregate, and a 1-row normalization scalar joined back — the
-  same bounded shuffle pair every round (operators/graph.py::pagerank
-  shape).  ``localCheckpoint`` truncates lineage per round.
+* The solver rounds iterate model-sized state (at most #models² matchup
+  rows at any battle volume), so all of them run inside ONE Python task
+  (``_solve_in_one_task``: one ``groupBy(lit(0)).applyInPandas``) — one
+  single-partition shuffle of the post-aggregate matrix, no per-round
+  Spark join/aggregate, no checkpoint, no collect.
 * Laplace smoothing (+1 virtual win each way per observed matchup)
   keeps every model's win total positive, so no denominator in the MM
   update can be zero and ratings stay strictly positive — the standard
@@ -42,10 +47,9 @@ surface: preference-data curation for the RLHF stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fotmobdatapipeline_spark.operators.exactmath import floor_div as _floor_div
+from pyspark.sql.types import LongType, StructField, StructType
 
 UNIT = 10**12
 _U2 = UNIT * UNIT
@@ -179,87 +183,137 @@ def smoothed_matrix_from_pairs(pair: DataFrame, smooth: int = 1) -> DataFrame:
     return fwd.unionByName(rev)
 
 
+def _solve_in_one_task(
+    frame: DataFrame, solve, key: str, out_cols: list[str], unit: int
+) -> DataFrame:
+    """Run a fixed-round solver over the WHOLE model-sized ``frame`` in
+    one Python task: ``groupBy(lit(0)).applyInPandas`` moves every row
+    to a single group (one shuffle, nothing collected) and
+    ``solve(rows)`` maps the row tuples to ``(key, *out_cols)`` tuples
+    in Python ints.  The last out column is the micro-unit rating;
+    Spark appends its display form ``CAST(micro AS DOUBLE) / unit``
+    under the same name minus ``_micro``.
+
+    Python ints never wrap, so every integer output is checked against
+    BIGINT range here — out of range raises ValueError instead of
+    reaching Arrow.  ``solve`` and this closure reference no package
+    globals: both pickle by value, so workers never import the
+    package."""
+    schema = StructType(
+        [StructField(key, frame.schema[key].dataType)]
+        + [StructField(c, LongType()) for c in out_cols]
+    )
+    cols = frame.columns
+    names = schema.fieldNames()
+    lo, hi = -(2**63), 2**63 - 1
+
+    def run(pdf):
+        import pandas as pd
+
+        out = solve(list(zip(*(pdf[c].tolist() for c in cols))))
+        for row in out:
+            for name, v in zip(names, row):
+                if isinstance(v, int) and not lo <= v <= hi:
+                    raise ValueError(
+                        f"{name} = {v} for {row[0]!r} leaves BIGINT range"
+                    )
+        return pd.DataFrame(out, columns=names)
+
+    micro = out_cols[-1]
+    # Aliased: a bare integer literal in groupBy is a column ordinal.
+    one = F.lit(0).alias("_task")
+    return frame.groupBy(one).applyInPandas(run, schema).select(
+        *names,
+        (F.col(micro).cast("double") / F.lit(float(unit))).alias(
+            micro.removesuffix("_micro")
+        ),
+    )
+
+
 def btl_ratings(matrix: DataFrame, iters: int = 6) -> DataFrame:
     """(model, n_wins, rating_micro, rating) after ``iters`` MM rounds.
 
     MM update (Hunter 2004):  p_i' = W_i / sum_j n_ij / (p_i + p_j),
     then normalize so ratings sum to n_models * UNIT (keeps the integer
-    scale stable across rounds).  In micro-units, every division the
-    exact decimal floor-division above (truncating; identical to
-    DuckDB's HUGEINT ``//`` on non-negative values):
+    scale stable across rounds).  In micro-units, every division
+    truncating (identical to DuckDB's HUGEINT ``//``):
 
-        t_ij = (n_ij * UNIT^2) fdiv (p_i + p_j)      -- all DECIMAL(38,0)
-        p_i' = (W_i  * UNIT^2) fdiv sum_j t_ij
-        p_i  = (p_i' * n_models * UNIT) fdiv sum p'  -- normalize
+        t_ij = (n_ij * UNIT^2) // (p_i + p_j)
+        p_i' = (W_i  * UNIT^2) // sum_j t_ij
+        p_i  = (p_i' * n_models * UNIT) // sum p'    -- normalize
 
-    Intermediates stay DECIMAL(38,0) end-to-end (bounds: n_ij * 1e24
-    needs n_ij < 1e14; t sums likewise), so no LONG wrap at any
-    realistic matchup count.  The output rating_micro IS cast to LONG —
-    ratings are normalized to sum n_models * UNIT, so that cast is safe
-    while n_models < 9.2e6.
+    All rounds run in one task (``_solve_in_one_task``).  Ratings are
+    normalized to sum n_models * UNIT, so rating_micro fits BIGINT
+    while n_models < 9.2e6; beyond that the task raises.
 
     ``matrix`` must be smoothed (wins >= 1 for every model; see
     pairwise_win_matrix) so sum_j t_ij and sum p' are never zero.
+    Rows whose opponent is not itself a model are ignored.
     """
-    m = matrix.localCheckpoint(eager=True)
-    totals = m.groupBy("model").agg(F.sum("wins").alias("w_tot"))
-    n_models = totals.count()  # driver scalar: one int, by construction
-    models = totals.localCheckpoint(eager=True)
+    unit, u2 = UNIT, _U2
 
-    dec = "decimal(38,0)"
-    ratings = models.select("model", F.lit(UNIT).cast(dec).alias("p"))
-    for _ in range(iters):
-        pi = ratings.select(F.col("model"), F.col("p").alias("p_i"))
-        pj = ratings.select(
-            F.col("model").alias("opponent"), F.col("p").alias("p_j")
-        )
-        den = (
-            m.join(pi, "model")
-            .join(pj, "opponent")
-            .select(
-                "model",
-                _floor_div(
-                    f"CAST(n_pair AS {dec}) * CAST({_U2} AS {dec})",
-                    f"CAST(p_i + p_j AS {dec})",
-                ).alias("t"),
-            )
-            .groupBy("model")
-            .agg(F.sum(F.col("t")).alias("den"))
-        )
-        unnorm = models.join(den, "model").select(
-            "model",
-            _floor_div(
-                f"CAST(w_tot AS {dec}) * CAST({_U2} AS {dec})",
-                f"CAST(den AS {dec})",
-            ).alias("pn"),
-        )
-        # Normalization scalar as a global window SUM over ``unnorm`` —
-        # one row per MODEL, bounded by construction (the matchup
-        # collapse above is the only data-scale stage), so the single-
-        # partition window is the documented model-sized-frame pattern.
-        # vs the previous agg + crossJoin(broadcast): ``unnorm`` (and its
-        # den join) is evaluated ONCE instead of twice per round and the
-        # per-round broadcast-exchange job disappears (r14 optimization;
-        # decimal window SUM == decimal agg SUM bit-for-bit).  The
-        # per-round checkpoint stays but is LAZY: the logical plan is
-        # truncated immediately (no per-iteration plan growth), while
-        # materialization rides the next consumer's job instead of a
-        # dedicated per-round job (measured -26% on the full entry).
-        ratings = (
-            unnorm.withColumn("s", F.sum("pn").over(Window.partitionBy()))
-            .select(
-                "model",
-                _floor_div(
-                    f"CAST(pn AS {dec}) * CAST({n_models * UNIT} AS {dec})",
-                    f"CAST(s AS {dec})",
-                ).alias("p"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    def solve(rows):
+        w_tot = {}
+        for m, _, _, w in rows:
+            w_tot[m] = w_tot.get(m, 0) + w
+        n_models = len(w_tot)
+        p = dict.fromkeys(w_tot, unit)
+        for _ in range(iters):
+            den = {}
+            for m, o, n, _ in rows:
+                if m in p and o in p:
+                    den[m] = den.get(m, 0) + n * u2 // (p[m] + p[o])
+            pn = {m: w_tot[m] * u2 // d for m, d in den.items()}
+            s = sum(pn.values())
+            p = {m: x * n_models * unit // s for m, x in pn.items()}
+        return [(m, w_tot[m], x) for m, x in p.items()]
 
-    return totals.join(ratings, "model").select(
+    return _solve_in_one_task(
+        matrix.select("model", "opponent", "n_pair", "wins"),
+        solve,
         "model",
-        F.col("w_tot").alias("n_wins"),
-        F.col("p").cast("bigint").alias("rating_micro"),
-        (F.col("p").cast("double") / F.lit(float(UNIT))).alias("rating"),
+        ["n_wins", "rating_micro"],
+        unit,
     )
+
+
+def rank_centrality(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str = "w",
+    iters: int = 5,
+    unit: int = UNIT,
+) -> DataFrame:
+    """(node, rank_micro, rank): rank centrality as a weighted PageRank
+    in exact integer micro-units — rank flows along edges in proportion
+    to their integer weights (on the defeat digraph: loser -> winner,
+    weighted by win counts), and the walk's mass after ``iters`` rounds
+    rates the nodes.  Per round, every division truncating:
+
+        contrib_e = (rank_src * w_e) // W_src           (W = out-weight)
+        rank_v'   = 15 * unit // 100 + (85 * sum contribs) // 100
+
+    Edges with w <= 0 are dropped; dangling nodes (no out-edges) leak
+    their mass, the standard simplified formulation.  All rounds run in
+    one task (``_solve_in_one_task``).
+    """
+    base = 15 * unit // 100
+    e = edges.select(
+        F.col(src).alias("node"), F.col(dst).alias("dst"), F.col(weight).alias("w")
+    ).filter(F.col("w") > 0)
+
+    def solve(rows):
+        w_out = {}
+        for s, d, w in rows:
+            w_out[s] = w_out.get(s, 0) + w
+            w_out.setdefault(d, 0)
+        r = dict.fromkeys(w_out, unit)
+        for _ in range(iters):
+            in_sum = dict.fromkeys(r, 0)
+            for s, d, w in rows:
+                in_sum[d] += r[s] * w // w_out[s]
+            r = {v: base + 85 * x // 100 for v, x in in_sum.items()}
+        return list(r.items())
+
+    return _solve_in_one_task(e, solve, "node", ["rank_micro"], unit)

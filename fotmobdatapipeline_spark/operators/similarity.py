@@ -269,6 +269,10 @@ def kmeans_lloyd(
     Empty cells keep their previous centroid (no respawn), so the cell
     count is stable for downstream storage partitioning.
 
+    Round state: model-sized (k×dim centroids held in Python), but each
+    round's assignment pass reads data-sized vectors, so it stays a
+    Spark job per round.
+
     ``train_sample_mod=m`` trains on the deterministic ~1/m hash sample
     ``xxhash64(id) % m == 0`` — the 100 TB discipline: centroid QUALITY
     needs a representative sample, not the corpus, and every iteration's
@@ -652,6 +656,10 @@ def power_iteration_top_component(
     Output: (dim, loading, eigenvalue) — the unit top component and
     ||X^T X v|| from the final round (the Rayleigh-quotient eigenvalue
     estimate for a unit v).
+
+    Round state: model-sized (the d-vector held in Python), but each
+    round's X^T X v pass reads data-sized vectors, so it stays a Spark
+    job per round.
     """
     spark = vectors.sparkSession
     seed = (
@@ -959,6 +967,10 @@ def pq_train_codebooks(
     the per-slice form and matches bit-for-bit.
 
     Output: (sub, code, c_vec) with code densely 0..codes-1 per sub.
+
+    Round state: model-sized (m*codes codebook rows held in Python), but
+    each round's assignment pass reads data-sized vectors, so it stays
+    a Spark job per round.
     """
     from pyspark.sql.types import (
         ArrayType,

@@ -3504,6 +3504,8 @@ def _mkv_oracle() -> str:
     doc="Markov removal-effect attribution; fixed 24-round absorbing solve.",
 )
 def events_markov_attribution(spark: SparkSession, sf_dir: str):
+    """Round state: model-sized (<= 30 transition cells, collected once),
+    so the absorbing-chain rounds run in plain Python."""
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.unix_micros("ts"), "event_id")
     e = ev.select(

@@ -4927,7 +4927,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str):
     N vocab-sized jobs, never N corpus passes.  Symbol sequences use the
     '<sym>' wrapped-string form so a plain (JVM codegen) string replace
     implements BPE's greedy left-to-right non-overlapping merge — no
-    UDF; the oracle replays the identical algorithm as unrolled SQL."""
+    UDF; the oracle replays the identical algorithm as unrolled SQL.
+
+    Round state: data-sized (the distinct-word table grows with the
+    corpus vocabulary), so the rounds stay Spark jobs."""
     docs = read_table(spark, sf_dir, "documents")
     return bpe_train_merges(spark, docs, _BPE_TRAIN_ROUNDS)
 
@@ -8940,6 +8943,9 @@ def _mmr_oracle() -> str:
     doc="MMR diversified rerank over the brute-force shortlist; bit-exact greedy.",
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str):
+    """Round state: model-sized (the bounded shortlist and the picks so
+    far), yet each round is still eager Spark jobs — a candidate for
+    the one-task solver of operators/preference.py."""
     from fotmobdatapipeline_spark.operators.similarity import dot, l2_norm
 
     emb = read_table(spark, sf_dir, "embeddings")

@@ -13,8 +13,9 @@ distributed prefix-scan rank + rank->rank+1 join (``_docs_with_next`` —
 a synthetic stand-in; real battle logs arrive pre-formed and need no
 successor lookup); win_rates is a single map-side-combinable aggregate; the BTL
 win matrix collapses data-scale battles to matchup-cardinality rows
-before any iteration, and each MM round is two hash joins + one
-aggregate over that matrix (pagerank shape, operators/graph.py).
+before any iteration, and every MM round then runs inside one Python
+task over that model-sized matrix (operators/preference.py::
+_solve_in_one_task) — no per-round Spark job.
 
 Determinism: the MM solver is exact-integer micro-unit arithmetic with
 truncating integral division — the oracle replays every round verbatim
@@ -419,11 +420,11 @@ def pref_connectivity_audit(spark: SparkSession, sf_dir: str):
 # Rank centrality (Negahban-Oh-Shah): the spectral alternative to the
 # MM solver — a weighted random walk on the defeat digraph (loser ->
 # winner, weighted by win counts); the stationary distribution ranks
-# models.  Exact integer micro-unit walk (operators/graph.py::
-# weighted_pagerank) replayed verbatim in HUGEINT by the oracle, same
-# MATERIALIZED-CTE discipline as the BTL rounds.  Having BOTH solvers
-# lets a pipeline cross-check ratings produced by different algorithms
-# on the same battles.
+# models.  Exact integer micro-unit walk (operators/preference.py::
+# rank_centrality, all rounds in one task) replayed verbatim in HUGEINT
+# by the oracle, same MATERIALIZED-CTE discipline as the BTL rounds.
+# Having BOTH solvers lets a pipeline cross-check ratings produced by
+# different algorithms on the same battles.
 # --------------------------------------------------------------------------
 _RC_ITERS = 5
 _RC_BASE = 15 * UNIT // 100
@@ -483,24 +484,26 @@ def _rank_centrality_oracle(iters: int = _RC_ITERS) -> str:
     doc="Rank centrality: weighted walk on the defeat digraph; integer-exact.",
 )
 def pref_rank_centrality(spark: SparkSession, sf_dir: str):
-    from fotmobdatapipeline_spark.operators.graph import weighted_pagerank
-    from fotmobdatapipeline_spark.operators.preference import raw_pair_counts
+    from fotmobdatapipeline_spark.operators.preference import (
+        rank_centrality,
+        raw_pair_counts,
+    )
 
     pair = raw_pair_counts(_battles(spark, sf_dir))
-    edges = (
-        pair.filter(F.col("w1") > 0)
-        .select(
-            F.col("m2").alias("src"), F.col("m1").alias("dst"), F.col("w1").alias("w")
-        )
-        .unionByName(
-            pair.filter(F.col("w2") > 0).select(
-                F.col("m1").alias("src"),
-                F.col("m2").alias("dst"),
-                F.col("w2").alias("w"),
+    # Both directed defeat edges of a matchup from ONE pass over the
+    # aggregate (loser -> winner, weighted by wins); rank_centrality
+    # drops the zero-weight ones.
+    edges = pair.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("m2").alias("src"), F.col("m1").alias("dst"),
+                         F.col("w1").alias("w")),
+                F.struct(F.col("m1").alias("src"), F.col("m2").alias("dst"),
+                         F.col("w2").alias("w")),
             )
-        )
-    )
-    return weighted_pagerank(edges, iters=_RC_ITERS, unit=UNIT)
+        ).alias("e")
+    ).select("e.*")
+    return rank_centrality(edges, iters=_RC_ITERS, unit=UNIT)
 
 
 # --------------------------------------------------------------------------

@@ -87,12 +87,6 @@ def build_reporting(fact, dims: dict):
     ).withColumn("order_month", F.date_format("o_orderdate", "yyyy-MM"))
 
 
-def build_star_tables(spark: SparkSession, sf_dir: str) -> dict:
-    dims = build_dims(spark, sf_dir)
-    fact = build_fact_df(spark, sf_dir, dims)
-    return {**dims, "sales_fact": fact, "sales_reporting": build_reporting(fact, dims)}
-
-
 def run_star_build(
     spark: SparkSession, sf_dir: str, out_dir: str, *, hash_big_dims: bool = False
 ) -> dict[str, str]:

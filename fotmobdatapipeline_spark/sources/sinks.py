@@ -100,25 +100,6 @@ def compact_parquet(
     return n_files
 
 
-def write_star(tables: dict[str, DataFrame], base_path: str, mode: str = "overwrite") -> dict[str, str]:
-    """Write every star-schema table under ``base_path/<name>`` — the
-    engine's whole 'load stage'.  Writes run as CONCURRENT Spark jobs
-    (thread pool): the tables are independent, the scheduler interleaves
-    their tasks, and per-job fixed overhead stops being serialized —
-    same pattern a production loader uses for independent sinks."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    paths = {name: f"{base_path}/{name}" for name in tables}
-    with ThreadPoolExecutor(max_workers=min(4, len(tables) or 1)) as pool:
-        futures = [
-            pool.submit(write_parquet, df, paths[name], mode)
-            for name, df in tables.items()
-        ]
-        for f in futures:
-            f.result()
-    return paths
-
-
 def write_shuffled_shards(
     df,
     path: str,

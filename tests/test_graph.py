@@ -118,28 +118,6 @@ def test_kcore_deterministic_across_partitionings(spark):
     assert one == many and len(one) == 5
 
 
-def test_weighted_pagerank_weights_matter(spark):
-    """Two sources each point at one sink; the sink fed by the heavier
-    edge from the shared voter must rank higher, and the walk is
-    deterministic across partitionings (exact integer arithmetic)."""
-    from fotmobdatapipeline_spark.operators.graph import weighted_pagerank
-
-    edges = [
-        ("v", "hi", 9),
-        ("v", "lo", 1),
-        ("hi", "v", 1),
-        ("lo", "v", 1),
-    ]
-    e = spark.createDataFrame(edges, "src string, dst string, w long")
-    got = {r["node"]: r["rank_micro"] for r in weighted_pagerank(e, iters=6).collect()}
-    assert got["hi"] > got["lo"]
-    many = {
-        r["node"]: r["rank_micro"]
-        for r in weighted_pagerank(e.repartition(5), iters=6).collect()
-    }
-    assert got == many
-
-
 def test_min_label_propagation_two_components(spark):
     """Two disjoint clusters (a path 1-2-3 and an edge 10-11) must
     resolve to their min-node component ids within the default rounds;

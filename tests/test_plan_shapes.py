@@ -836,15 +836,48 @@ def test_preference_entries_shapes(spark):
     """Preference family doctrine (round 12): the battle derivation's
     per-lang successor comes from the prefix-scan rank + rank→rank+1
     equi-join (_docs_with_next), NOT a per-lang lead() window (3-5
-    langs = 3-5 single-task data-scale sorts); the BTL MM rounds are
-    hash joins over the matchup matrix plus the 1-row normalization
-    scalar (broadcast by construction) — never a cartesian, never
-    Python, never lead()."""
-    for name in ("pref_winrate", "pref_btl_ratings"):
+    langs = 3-5 single-task data-scale sorts) — never a cartesian,
+    never a row-wise Python UDF, never lead().
+
+    The solvers' rounds iterate model-sized state, so they run in
+    Python on purpose: exactly one grouped-map task
+    (FlatMapGroupsInPandas) per solver, and it sits ABOVE the (m1, m2)
+    matchup aggregate — the data-scale battles never reach Python, only
+    the post-aggregate matrix of at most #models² rows does."""
+    for name in ("pref_winrate", "pref_btl_ratings", "pref_rank_centrality"):
         plan = _plan(_q(name)(spark, SF_ORACLE))
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
         assert "lead(" not in plan, (name, plan)
+        if name == "pref_winrate":
+            assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+            continue
+        assert plan.count("FlatMapGroupsInPandas") == 1, (name, plan)
+        agg = plan.find("HashAggregate(keys=[m1#")
+        assert 0 <= plan.index("FlatMapGroupsInPandas") < agg, (name, plan)
+
+
+def _build_jobs(spark, name):
+    """Spark jobs launched while BUILDING (not running) a catalog entry,
+    counted through its job group by ``sc.statusTracker()``."""
+    sc = spark.sparkContext
+    group = f"build-jobs-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        _q(name)(spark, SF_ORACLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_preference_solvers_add_no_build_jobs(spark):
+    """The solver rounds are one lazy task, not eager per-round Spark
+    jobs: building either solver entry launches no more jobs than
+    building pref_winrate, which shares the battle derivation and runs
+    no solver at all."""
+    base = _build_jobs(spark, "pref_winrate")
+    for name in ("pref_rank_centrality", "pref_btl_ratings"):
+        assert _build_jobs(spark, name) <= base, name
 
 
 def test_dpo_pairs_successor_join_not_lead_window(spark):

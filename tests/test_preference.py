@@ -1,16 +1,19 @@
-"""Preference aggregation (operators/preference.py): win rates and
-Bradley-Terry MM ratings — hand-computed cases, ordering, symmetry,
-mass conservation, and partitioning-independence (the integer-exact
-determinism claim)."""
+"""Preference aggregation (operators/preference.py): win rates,
+Bradley-Terry MM ratings and rank centrality — hand-computed cases,
+ordering, symmetry, mass conservation, exact Python replays, and
+partitioning-independence (the integer-exact determinism claim)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from fotmobdatapipeline_spark.operators.preference import (
     UNIT,
     btl_ratings,
     pairwise_win_matrix,
+    rank_centrality,
     win_rates,
 )
 
@@ -230,6 +233,76 @@ def test_btl_hot_matchup_no_long_wrap(spark):
     assert got == want
     assert all(v > 0 for v in got.values())
     assert got["A"] > got["B"] > got["C"]
+
+
+def _rank_centrality_python_replay(edges, iters=5, unit=UNIT):
+    """Pure-Python exact-integer replay of the weighted walk, spelled
+    like the oracle's CTEs: positive-weight edges, out-weight per src,
+    and per round a sum of truncated contributions per dst."""
+    e = [(s, d, w) for s, d, w in edges if w > 0]
+    nodes = sorted({s for s, _, _ in e} | {d for _, d, _ in e})
+    w_out = {v: sum(w for s, _, w in e if s == v) for v in nodes}
+    r = {v: unit for v in nodes}
+    for _ in range(iters):
+        in_sum = {
+            v: sum((r[s] * w) // w_out[s] for s, d, w in e if d == v)
+            for v in nodes
+        }
+        r = {v: 15 * unit // 100 + (85 * in_sum[v]) // 100 for v in nodes}
+    return r
+
+
+def test_rank_centrality_matches_python_replay(spark):
+    """Duplicate edges add up, non-positive weights drop out (and take
+    their endpoints with them when nothing else names them), dangling
+    nodes leak mass — all bit-identical to the replay."""
+    edges = [
+        ("a", "b", 3),
+        ("a", "b", 2),  # duplicate (src, dst): both rows count
+        ("b", "c", 2),
+        ("c", "a", 5),
+        ("a", "c", 1),
+        ("d", "a", 4),
+        ("c", "e", 1),  # e is dangling
+        ("b", "d", 0),  # dropped; d stays a node through d -> a
+        ("f", "a", 0),  # dropped; f names no other edge
+    ]
+    e = spark.createDataFrame(edges, "src string, dst string, w long")
+    for iters in (0, 1, 5):
+        out = rank_centrality(e, iters=iters).collect()
+        got = {r["node"]: r["rank_micro"] for r in out}
+        assert got == _rank_centrality_python_replay(edges, iters=iters)
+        assert all(r["rank"] == r["rank_micro"] / UNIT for r in out)
+
+
+def test_rank_centrality_weights_matter(spark):
+    """Two sources each point at one sink; the sink fed by the heavier
+    edge from the shared voter must rank higher, and the walk is
+    deterministic across partitionings (exact integer arithmetic)."""
+    edges = [
+        ("v", "hi", 9),
+        ("v", "lo", 1),
+        ("hi", "v", 1),
+        ("lo", "v", 1),
+    ]
+    e = spark.createDataFrame(edges, "src string, dst string, w long")
+    got = {r["node"]: r["rank_micro"] for r in rank_centrality(e, iters=6).collect()}
+    assert got["hi"] > got["lo"]
+    many = {
+        r["node"]: r["rank_micro"]
+        for r in rank_centrality(e.repartition(5), iters=6).collect()
+    }
+    assert got == many
+
+
+def test_rank_centrality_out_of_bigint_range_raises(spark):
+    """Python ints never wrap, so a rating past BIGINT must fail with a
+    clear error (as Spark's ANSI cast did) rather than wrap or reach
+    Arrow: 12 unit-rank voters push the hub to 10.35 units of 1e18."""
+    edges = [(f"s{i}", "hub", 1) for i in range(12)]
+    e = spark.createDataFrame(edges, "src string, dst string, w long")
+    with pytest.raises(PythonException, match="rank_micro = .* leaves BIGINT range"):
+        rank_centrality(e, iters=1, unit=10**18).collect()
 
 
 def test_win_matrix_sink_btl_equals_batch(spark, tmp_path):
